@@ -29,14 +29,11 @@ DEFAULT_PORTS = {"http": 80, "https": 443}
 # Hashing / dedup (SURVEY.md A3, A4)
 # --------------------------------------------------------------------------
 XXHASH_SEED = 42           # Spark builtin xxhash64 default seed
-BLOOM_SHARDS = 32          # local default; size for 10^10: see dedup.py docs
-BLOOM_BITS_PER_SHARD = 1 << 20   # 128 KiB/shard locally
+# The whole sketch (BLOOM_SHARDS × BLOOM_BITS_PER_SHARD bits = 4 MiB) is
+# broadcast to every probe task by dedup.filter_unseen — see dedup.py docs.
+BLOOM_SHARDS = 32
+BLOOM_BITS_PER_SHARD = 1 << 20   # 128 KiB/shard
 BLOOM_NUM_HASHES = 7
-# filter_unseen probes via driver broadcast while the whole sketch fits
-# comfortably beside the driver/executor heaps; past this it auto-switches
-# to the shuffled cogroup probe (one shard bitmap per task). 512 MiB keeps
-# the broadcast far below typical 4-8 GiB executor memory at 10^10 URLs.
-BLOOM_BROADCAST_MAX_BYTES = 512 << 20
 
 # --------------------------------------------------------------------------
 # Politeness / scheduling (SURVEY.md A5, A6)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .constants import BLOOM_SHARDS
+from .dedup import _exact_backstop
 from .xxh import splitmix64
 
 NBUCKETS = 1 << 13  # per shard: 8192 buckets × 4 slots × 2B = 64 KiB
@@ -295,16 +296,5 @@ def filter_unseen_cuckoo(
     sketch: probe pre-filter + exact anti-join backstop. Persisted frame
     and Broadcast handle land in `persisted_out` (both expose unpersist())
     so long driver sessions can release them after the wave's actions."""
-    from pyspark.storagelevel import StorageLevel
-
-    probed = cuckoo_probe_broadcast(
-        candidates, cuckoo, resources_out=persisted_out
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_out is not None:
-        persisted_out.append(probed)
-    fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    survived = maybe.join(
-        seen.select("digest", "url_canon"), on=["digest", "url_canon"], how="left_anti"
-    )
-    return fresh.unionByName(survived)
+    probed = cuckoo_probe_broadcast(candidates, cuckoo, resources_out=persisted_out)
+    return _exact_backstop(probed, seen, persisted_out)

@@ -4,20 +4,21 @@ Two-stage, as mandated by the north_star ("partitioned Bloom/cuckoo URL-seen
 filter implemented as vectorized Arrow UDFs over xxhash64 digests"):
 
 1. **Partitioned Bloom probe** — the persistent `bloom` table holds one
-   bitmap per shard (shard = pmod(digest, P)). Candidate digests are
-   cogrouped with their shard's bitmap and probed in a single vectorized
-   numpy pass (`applyInPandas`, Arrow-batched — no per-row Python). A miss
-   is *definitely new*; only hits ("maybe seen") continue to stage 2.
+   bitmap per shard (shard = pmod(digest, P)). The bitmaps are broadcast
+   and each Arrow batch of candidate digests is probed against its shards
+   in one vectorized numpy pass (scalar pandas UDF — no per-row Python,
+   and only the digest column crosses the JVM↔Python boundary). A miss is
+   *definitely new*; only hits ("maybe seen") continue to stage 2.
 2. **Exact anti-join backstop** — maybe-seen candidates `left_anti`-join the
    exact `seen` table on (digest, url_canon) to kill Bloom false positives.
    Joining on url_canon too protects the 10^10-scale case where 64-bit
    digest collisions have expectation ≈ 2.7 (SURVEY.md §1.2).
 
-Sizing for a 10^10-URL frontier: P = 4096 shards × m = 3 GiB·8/4096 ≈
-6.1e7 bits/shard at ~9.6 bits/element gives FPR ≈ 1%; each shard bitmap is
-~7.3 MB — comfortably inside an executor grouped-map task, and stage 2 then
-anti-joins only ~1% of candidates instead of all of them. Locally we run
-P=32, m=2^20 (constants.py).
+Sizing: the sketch is P × m bits, fixed by constants.py (P=32, m=2^20:
+4 MiB), so the broadcast probe is the only probe path. At ~9.6
+bits/element the FPR is ≈ 1%, and stage 2 anti-joins only ~1% of
+candidates instead of all of them. A sketch grown past what a broadcast
+can carry would need a shuffled per-shard probe.
 
 The Bloom update is itself a cogrouped map: new digests are OR-ed into their
 shard's bitmap and the full (small) bloom table is rewritten as the wave's
@@ -26,19 +27,12 @@ snapshot — the classic "sketch as data, not as service" Spark pattern.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .constants import (
-    BLOOM_BITS_PER_SHARD,
-    BLOOM_BROADCAST_MAX_BYTES,
-    BLOOM_NUM_HASHES,
-    BLOOM_SHARDS,
-)
+from .constants import BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES, BLOOM_SHARDS
 from .tables import BLOOM_SCHEMA
 from .xxh import splitmix64
 
@@ -84,18 +78,14 @@ def bloom_probe_broadcast(
     """candidates(digest, ...) → same rows + boolean `maybe_seen`, via a
     BROADCAST of the shard bitmaps and a scalar Arrow-batched pandas UDF.
 
-    Preferred probe path while the sketch is small: only the `digest`
-    column crosses the JVM↔Python boundary (the cogroup variant ships
-    every candidate column through Arrow and pays a shuffle).
-    `filter_unseen` auto-switches to `bloom_probe` once the measured
-    sketch size passes BLOOM_BROADCAST_MAX_BYTES.
+    Only the `digest` column crosses the JVM↔Python boundary, and the
+    candidates are not shuffled.
 
     The Broadcast handle is appended to `resources_out` when given (it has
     an `unpersist()` like a persisted DataFrame); callers should release
     it after the wave's actions complete or a long driver session
     accumulates broadcast blocks.
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     spark = candidates.sparkSession
@@ -124,41 +114,6 @@ def bloom_probe_broadcast(
         return pd.Series(out)
 
     return candidates.withColumn("maybe_seen", probe(F.col("digest")))
-
-
-def bloom_probe(candidates: DataFrame, bloom: DataFrame) -> DataFrame:
-    """candidates(digest, ...) → same rows + boolean `maybe_seen`.
-
-    Cogroup by shard; one Arrow batch per shard probes all its digests in
-    one vectorized pass. A shard with no bloom row (fresh filter) probes
-    all-False. (Scale fallback for a filter too big to broadcast — see
-    bloom_probe_broadcast for the default path.)
-    """
-    from pyspark.sql import types as T
-
-    cand = candidates.withColumn("_shard", shard_col(F.col("digest")))
-    # (copy — StructType.add mutates the DataFrame's cached schema in place)
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return left.assign(maybe_seen=pd.Series([], dtype=bool))
-        if right.empty:
-            return left.assign(maybe_seen=False)
-        bits = np.frombuffer(right["bits"].iloc[0], dtype=np.uint8)
-        nbits = int(right["nbits"].iloc[0])
-        k = int(right["k"].iloc[0])
-        pos = _positions(left["digest"].to_numpy(), nbits, k)
-        return left.assign(maybe_seen=_probe_bits(bits, pos))
-
-    return (
-        cand.groupBy("_shard")
-        .cogroup(bloom.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-        .drop("_shard")
-    )
 
 
 def bloom_update(new_digests: DataFrame, bloom: DataFrame) -> DataFrame:
@@ -193,53 +148,21 @@ def bloom_update(new_digests: DataFrame, bloom: DataFrame) -> DataFrame:
     )
 
 
-def filter_unseen(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    seen: DataFrame,
-    persisted_out: list | None = None,
-    broadcast_max_bytes: int = BLOOM_BROADCAST_MAX_BYTES,
+def _exact_backstop(
+    probed: DataFrame, seen: DataFrame, persisted_out: list | None
 ) -> DataFrame:
-    """Rows of `candidates` whose (digest, url_canon) is NOT in the seen set.
+    """Rows of `probed` (a sketch probe's output, with `maybe_seen`) whose
+    (digest, url_canon) is NOT in `seen`: sketch-negative rows pass
+    straight through, sketch-positive rows are verified with an exact
+    left_anti join (false-positive kill).
 
-    Bloom-negative rows skip the join entirely; bloom-positive rows are
-    verified with an exact left_anti join (false-positive kill). Columns of
-    `candidates` pass through unchanged.
-
-    Probe-path auto-switch (VERDICT r1 next-round #7): the sketch size is
-    measured from the bloom table itself (sum of nbits — a sub-second agg
-    over ≤ BLOOM_SHARDS rows). Under `broadcast_max_bytes` the bitmaps are
-    broadcast and probed with a scalar pandas UDF (no shuffle); past it —
-    a 10^10-URL filter is a few GiB — the cogrouped per-shard probe runs
-    instead, so no caller needs to know how big the filter has grown.
-
-    The probed frontier is persisted before the fresh/maybe fan-out —
-    without it, Spark recomputes the whole Bloom probe subtree once per
-    union branch (verified via .explain). At 10^10 scale this is the
-    wave's materialization point (the frontier table write); locally
-    MEMORY_AND_DISK stands in. Callers can collect the handle via
-    `persisted_out` to unpersist after the wave (broadcast handles are
-    appended there too — both expose unpersist()).
-    """
+    The probed frame is persisted before the fresh/maybe fan-out — without
+    it, Spark recomputes the whole probe subtree once per union branch
+    (verified via .explain). At 10^10 scale this is the wave's
+    materialization point (the frontier table write); locally
+    MEMORY_AND_DISK stands in. The handle lands in `persisted_out`."""
     from pyspark.storagelevel import StorageLevel
 
-    # persist the sketch BEFORE the sizing agg: without it the whole
-    # upstream bloom_update cogroup evaluates twice — once for sum(nbits),
-    # once for the broadcast collect (measured: the double evaluation was
-    # most of crawl_bloom_dedup's wall time, VERDICT r2 next-round #4)
-    bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_out is not None:
-        persisted_out.append(bloom)
-    sketch_bytes = (bloom.agg(F.sum("nbits").alias("b")).first()["b"] or 0) // 8
-    if sketch_bytes <= broadcast_max_bytes:
-        probed = bloom_probe_broadcast(candidates, bloom, resources_out=persisted_out)
-        if persisted_out is None:
-            # the probe's bitmap now lives in its own broadcast — the bloom
-            # DataFrame cache has no further reader, and no caller holds a
-            # handle to release it later (ADVICE r3 leak)
-            bloom.unpersist()
-    else:
-        probed = bloom_probe(candidates, bloom)
     probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
     if persisted_out is not None:
         persisted_out.append(probed)
@@ -249,3 +172,21 @@ def filter_unseen(
         seen.select("digest", "url_canon"), on=["digest", "url_canon"], how="left_anti"
     )
     return fresh.unionByName(survived)
+
+
+def filter_unseen(
+    candidates: DataFrame,
+    bloom: DataFrame,
+    seen: DataFrame,
+    persisted_out: list | None = None,
+) -> DataFrame:
+    """Rows of `candidates` whose (digest, url_canon) is NOT in the seen set.
+
+    Bloom probe (broadcast bitmaps) then the exact anti-join backstop.
+    Columns of `candidates` pass through unchanged. The bitmap collect is
+    the only Spark job submitted before an action on the result. Callers
+    can collect the probe's Broadcast and the persisted probed frame via
+    `persisted_out` to unpersist after the wave (both expose unpersist()).
+    """
+    probed = bloom_probe_broadcast(candidates, bloom, resources_out=persisted_out)
+    return _exact_backstop(probed, seen, persisted_out)

@@ -19618,7 +19618,7 @@ def crawl_host_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # means perfectly disjoint ranges (scans prune to one file per key);
 # depth ≈ n_files means the layout is useless and a rewrite is due.
 # Both engines derive the zonemaps from the data (groupBy shard) and
-# count pairwise overlaps — the shard count is bounded (N_SHARDS), so the
+# count pairwise overlaps — the shard count is bounded (16 here), so the
 # audit join is N², tiny, and broadcastable.
 
 

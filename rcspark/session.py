@@ -13,17 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app: str = "rcspark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app: str = "rcspark", cores: int | None = None) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or cores
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

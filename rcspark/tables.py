@@ -20,8 +20,12 @@ Tables come in two flavors:
 - APPEND (``seen``, ``fetch_log``, ``corpus``, ``lineage``): each wave adds
   rows; read = union of all committed waves. (On real Iceberg: appends.)
 
-At 10^10-frontier scale the bindings change (Iceberg catalog + bucket(digest)
-partition spec, see dedup.py/schedule.py docs) but this API surface does not.
+Every table is written unpartitioned (one ``df.write.parquet`` per wave dir)
+and read with one ``spark.read.schema(s).parquet(*dirs)``: no reader prunes
+on a digest bucket, and only Spark ``bucketBy`` tables would spare the
+dedup anti-join its shuffle (tests/test_bucketed_join.py). At
+10^10-frontier scale the bindings change (Iceberg catalog, see
+dedup.py/schedule.py docs) but this API surface does not.
 """
 
 from __future__ import annotations
@@ -30,22 +34,13 @@ import json
 import os
 import re
 import shutil
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 SNAPSHOT_TABLES = {"frontier_pending", "bloom"}
-
-# Tables laid out as bucket(digest, P) — the Iceberg partition-spec
-# analogue in the parquet fallback: rows are hive-partitioned by
-# shard = pmod(digest, P), one file per shard (clustered write). Iceberg
-# binds the same spec with a true bucket transform; readers get
-# shard-predicate partition pruning either way, and a digest-keyed
-# operator (dedup anti-join, Bloom/cuckoo shard build) finds each key's
-# rows in exactly one directory.
-BUCKETED_TABLES = {"frontier_pending", "seen"}
-N_SHARDS = 32  # == constants.BLOOM_SHARDS (kept literal: layout contract)
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -222,29 +217,20 @@ class Warehouse:
     def _wave_dir(self, table: str, wave: int) -> str:
         return os.path.join(self.root, table, f"wave={wave:06d}")
 
-    def write_wave(self, table: str, df: DataFrame, wave: int) -> None:
-        """Write one wave's data for `table` with an atomic dir rename.
-
-        BUCKETED_TABLES are clustered by digest shard before writing
-        (repartition by shard → partitionBy(shard) → one file per shard)."""
-        from pyspark.sql import functions as F
-
-        final = self._wave_dir(table, wave)
+    @staticmethod
+    def _write_atomic(final: str, write: Callable[[str], None]) -> None:
+        """Create the dir `final` atomically: `write(tmp)` fills a temp dir
+        (data plus any sidecar), which is then renamed into place."""
         tmp = final + ".inprogress"
         for p in (final, tmp):
             if os.path.exists(p):
                 shutil.rmtree(p)  # garbage from a killed, uncommitted run
-        if table in BUCKETED_TABLES and "digest" in df.columns:
-            (
-                df.withColumn("shard", F.pmod(F.col("digest"), F.lit(N_SHARDS)).cast("int"))
-                .repartition(N_SHARDS, "shard")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(tmp)
-            )
-        else:
-            df.write.mode("overwrite").parquet(tmp)
+        write(tmp)
         os.rename(tmp, final)
+
+    def write_wave(self, table: str, df: DataFrame, wave: int) -> None:
+        """Write one wave's data for `table` with an atomic dir rename."""
+        self._write_atomic(self._wave_dir(table, wave), df.write.parquet)
 
     # -- compaction (Iceberg rewrite-data-files analogue) -------------------
     def compact(self, table: str, schema: T.StructType) -> None:
@@ -279,20 +265,7 @@ class Warehouse:
         # Write the replacement FIRST; any prior compact dir (a lower
         # watermark, or an uncommitted leftover at this name) stays intact
         # and readable until the new copy exists on disk.
-        if table in BUCKETED_TABLES and "digest" in df.columns:
-            from pyspark.sql import functions as F
-
-            (
-                df.withColumn(
-                    "shard", F.pmod(F.col("digest"), F.lit(N_SHARDS)).cast("int")
-                )
-                .repartition(N_SHARDS, "shard")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(tmp)
-            )
-        else:
-            df.write.mode("overwrite").parquet(tmp)
+        df.write.parquet(tmp)
         if os.path.exists(final):  # uncommitted leftover from a killed attempt
             old = final + ".superseded"
             if os.path.exists(old):
@@ -367,32 +340,12 @@ class Warehouse:
             return set(json.load(f).get("waves", []))
 
     # -- reads -------------------------------------------------------------
-    def _read_schema(self, table: str, schema: T.StructType) -> T.StructType:
-        if table in BUCKETED_TABLES:
-            return T.StructType(
-                list(schema.fields) + [T.StructField("shard", T.IntegerType(), True)]
-            )
-        return schema
-
-    def _read_dir(self, table: str, d: str, schema: T.StructType) -> DataFrame:
-        if table in BUCKETED_TABLES:
-            # basePath pins partition discovery to THIS wave dir so only the
-            # shard= level is treated as a partition (wave=NNNNNN above it
-            # would otherwise be discovered too and conflict across dirs)
-            df = (
-                self.spark.read.option("basePath", d)
-                .schema(self._read_schema(table, schema))
-                .parquet(d)
-            )
-            return df.drop("shard")
-        return self.spark.read.schema(schema).parquet(d)
-
     def read_snapshot(self, table: str, wave: int, schema: T.StructType) -> DataFrame:
         """Latest-state table at `wave` (SNAPSHOT flavor)."""
         d = self._wave_dir(table, wave)
         if wave < 0 or not os.path.exists(d):
             return self.spark.createDataFrame([], schema)
-        return self._read_dir(table, d, schema)
+        return self.spark.read.schema(schema).parquet(d)
 
     def read_appends(self, table: str, through_wave: int, schema: T.StructType) -> DataFrame:
         """Union of all committed waves ≤ through_wave (APPEND flavor).
@@ -447,13 +400,6 @@ class Warehouse:
         ]
         if not dirs:
             return self.spark.createDataFrame([], schema)
-        if table in BUCKETED_TABLES:
-            from functools import reduce
-
-            return reduce(
-                lambda a, b: a.unionByName(b),
-                (self._read_dir(table, d, schema) for d in dirs),
-            )
         return self.spark.read.schema(schema).parquet(*dirs)
 
     # -- merge-on-read row-level deletes (Iceberg v2 analogue) --------------
@@ -481,13 +427,7 @@ class Warehouse:
         """Write one wave's delete file (kind: 'position' | 'equality')."""
         if kind not in ("position", "equality"):
             raise ValueError(f"unknown delete kind {kind!r}")
-        final = self._delete_dir(table, kind, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        df.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
+        self._write_atomic(self._delete_dir(table, kind, wave), df.write.parquet)
 
     def read_delete_files(
         self, table: str, kind: str, through_wave: int, schema: T.StructType
@@ -566,20 +506,13 @@ class SpecWarehouse(Warehouse):
         """Write one wave under an explicit partition spec, recording the
         spec beside the data (atomic dir rename, same crash discipline as
         write_wave)."""
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        (
-            df.repartition(*spec_cols)
-            .write.mode("overwrite")
-            .partitionBy(*spec_cols)
-            .parquet(tmp)
-        )
-        with open(_spec_path(tmp), "w") as f:
-            json.dump({"spec": spec_cols}, f)
-        os.rename(tmp, final)
+
+        def write(tmp: str) -> None:
+            df.repartition(*spec_cols).write.partitionBy(*spec_cols).parquet(tmp)
+            with open(_spec_path(tmp), "w") as f:
+                json.dump({"spec": spec_cols}, f)
+
+        self._write_atomic(self._wave_dir(table, wave), write)
 
     def wave_spec(self, table: str, wave: int) -> list[str]:
         with open(_spec_path(self._wave_dir(table, wave))) as f:
@@ -654,21 +587,13 @@ class EvoWarehouse(SpecWarehouse):
         missing = set(df.columns) - set(field_ids)
         if missing:
             raise ValueError(f"field_ids missing for {sorted(missing)}")
-        if table in BUCKETED_TABLES:
-            # this path skips write_wave's digest-shard clustering branch;
-            # refuse rather than silently lose bucketing (ADVICE r4)
-            raise ValueError(
-                f"{table} is bucketed — use write_wave, not write_wave_ids"
-            )
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        df.write.mode("overwrite").parquet(tmp)
-        with open(_schema_sidecar(tmp), "w") as f:
-            json.dump({"field_ids": field_ids}, f)
-        os.rename(tmp, final)
+
+        def write(tmp: str) -> None:
+            df.write.parquet(tmp)
+            with open(_schema_sidecar(tmp), "w") as f:
+                json.dump({"field_ids": field_ids}, f)
+
+        self._write_atomic(self._wave_dir(table, wave), write)
 
     def read_wave_evolved(
         self,
@@ -737,25 +662,18 @@ class HiddenPartWarehouse(EvoWarehouse):
     def write_wave_hidden(
         self, table: str, df: DataFrame, wave: int, hspec: list[dict]
     ) -> None:
-        final = self._wave_dir(table, wave)
-        tmp = final + ".inprogress"
-        for p in (final, tmp):
-            if os.path.exists(p):
-                shutil.rmtree(p)
         out = df
         names = []
         for e in hspec:
             out = out.withColumn(e["name"], self._hidden_expr(e))
             names.append(e["name"])
-        (
-            out.repartition(*names)
-            .write.mode("overwrite")
-            .partitionBy(*names)
-            .parquet(tmp)
-        )
-        with open(_spec_path(tmp), "w") as f:
-            json.dump({"hidden": hspec}, f)
-        os.rename(tmp, final)
+
+        def write(tmp: str) -> None:
+            out.repartition(*names).write.partitionBy(*names).parquet(tmp)
+            with open(_spec_path(tmp), "w") as f:
+                json.dump({"hidden": hspec}, f)
+
+        self._write_atomic(self._wave_dir(table, wave), write)
 
     def read_wave_hidden_pruned(
         self,

@@ -50,7 +50,7 @@ def engine_dfs(spark, fx):
 
 
 def main():
-    spark = get_spark(app="dev-e2e", cores=8, shuffle_partitions=8)
+    spark = get_spark(app="dev-e2e", cores=8)
     fx = make_fixture(n_hosts=5, urls_per_host=20, seed=7)
     orc = run_oracle(fx)
     print(f"oracle: {len(orc.order)} fetch attempts, {len(orc.seen)} seen, "

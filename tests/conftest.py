@@ -12,6 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from rcspark.session import get_spark
 
-    s = get_spark(app="rcspark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app="rcspark-tests", cores=8)
     yield s
     s.stop()

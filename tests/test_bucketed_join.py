@@ -1,11 +1,13 @@
 """Co-located joins via Spark bucketed tables — the 10^10-scale dedup story.
 
-At production scale the frontier and seen tables are bucketed by digest
-(Iceberg bucket(digest, P); rcspark.tables' hive-layout fallback), so the
-exact-dedup anti-join needs NO shuffle: matching buckets are read
-co-located. This test materializes that claim in-session: two tables
-written with bucketBy(8, digest) join with zero Exchange operators in the
-physical plan, while the same join on plain parquet shuffles both sides.
+Bucketing the frontier and seen tables by digest (Spark bucketBy, or
+Iceberg bucket(digest, P)) would let the exact-dedup anti-join skip the
+shuffle: matching buckets are read co-located. rcspark.tables writes
+plain parquet, so today that anti-join shuffles (hive-style shard= dirs
+would not help — they are not Spark buckets). This test materializes the
+claim in-session: two tables written with bucketBy(8, digest) join with
+zero Exchange operators in the physical plan, while the same join on
+plain parquet shuffles both sides.
 """
 
 from __future__ import annotations

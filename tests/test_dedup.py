@@ -3,10 +3,16 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.broadcast import Broadcast
 from pyspark.sql import functions as F
 
 from rcspark.constants import BLOOM_BITS_PER_SHARD, BLOOM_NUM_HASHES
-from rcspark.dedup import bloom_probe, bloom_update, empty_bloom, filter_unseen
+from rcspark.dedup import (
+    bloom_probe_broadcast,
+    bloom_update,
+    empty_bloom,
+    filter_unseen,
+)
 
 
 def _digests(spark, urls):
@@ -25,14 +31,18 @@ def bloom_with_5k(spark):
 
 def test_bloom_no_false_negatives(spark, bloom_with_5k):
     inserted, bloom = bloom_with_5k
-    probed = bloom_probe(_digests(spark, inserted), bloom)
+    probed = bloom_probe_broadcast(_digests(spark, inserted), bloom)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_bloom_fpr_bounded(spark, bloom_with_5k):
     _, bloom = bloom_with_5k
     novel = [f"http://other{i % 5}.example/q/{i}" for i in range(20000)]
-    fp = bloom_probe(_digests(spark, novel), bloom).filter(F.col("maybe_seen")).count()
+    fp = (
+        bloom_probe_broadcast(_digests(spark, novel), bloom)
+        .filter(F.col("maybe_seen"))
+        .count()
+    )
     # theoretical FPR at n=5000/32 shards, m=2^20, k=7 is ~1e-17; any
     # measurable rate means broken mixing — allow a generous 0.1%
     assert fp / len(novel) < 0.001, fp
@@ -47,35 +57,21 @@ def test_filter_unseen_exact(spark, bloom_with_5k):
     assert got == sorted(f"http://fresh.example/n/{i}" for i in range(500))
 
 
-def test_filter_unseen_auto_switches_probe_path(spark, bloom_with_5k):
-    """The broadcast-vs-cogroup switch (VERDICT r1 #7) picks by measured
-    sketch bytes: a 0-byte threshold must force the cogroup branch, the
-    default must take the broadcast branch, and BOTH must return the same
-    rows (the switch is a physical-plan choice, never a semantics one)."""
+def test_filter_unseen_submits_only_the_bitmap_collect(spark, bloom_with_5k):
+    """Building the filter_unseen plan runs exactly one Spark job — the
+    bitmap collect behind the probe's broadcast. No sizing job precedes it."""
     inserted, bloom = bloom_with_5k
     seen = _digests(spark, inserted).withColumn("wave", F.lit(0))
-    mixed = inserted[:200] + [f"http://fresh.example/s/{i}" for i in range(200)]
-    res_bcast: list = []
-    out_bcast = filter_unseen(
-        _digests(spark, mixed), bloom, seen, persisted_out=res_bcast
-    )
-    got_bcast = sorted(r.url_canon for r in out_bcast.collect())
-    # broadcast branch leaves its Broadcast handle in persisted_out
-    from pyspark.broadcast import Broadcast
-
-    assert any(isinstance(h, Broadcast) for h in res_bcast)
-
-    res_cg: list = []
-    out_cg = filter_unseen(
-        _digests(spark, mixed), bloom, seen,
-        persisted_out=res_cg, broadcast_max_bytes=0,
-    )
-    got_cg = sorted(r.url_canon for r in out_cg.collect())
-    assert not any(isinstance(h, Broadcast) for h in res_cg)
-    assert got_bcast == got_cg == sorted(
-        f"http://fresh.example/s/{i}" for i in range(200)
-    )
-    for h in (*res_bcast, *res_cg):
+    cand = _digests(spark, inserted[:10] + ["http://fresh.example/j/0"])
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    handles: list = []
+    before = sched.nextJobId()
+    out = filter_unseen(cand, bloom, seen, persisted_out=handles)
+    assert sched.nextJobId() - before == 1
+    # the probe's Broadcast is handed back for release, beside the persist
+    assert any(isinstance(h, Broadcast) for h in handles)
+    assert [r.url_canon for r in out.collect()] == ["http://fresh.example/j/0"]
+    for h in handles:
         h.unpersist()
 
 
